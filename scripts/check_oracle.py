@@ -3,7 +3,11 @@
 given SF dir, then execute each oracle SQL in DuckDB over the same tables
 and compare (columns sorted by name, rows sorted, values hashed).
 
-Usage: python3 scripts/check_oracle.py [sfdir] [outdir]
+Usage: python3 scripts/check_oracle.py [sfdir] [outdir] [name1,name2,...]
+
+The optional third argument restricts the compare to the listed queries
+(the same comma-separated form as graft.Verify's third argument); with
+no list every oracle is checked.
 """
 import json
 import sys
@@ -12,6 +16,7 @@ import pandas as pd
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
+ONLY = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -27,6 +32,11 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
+    if ONLY is not None:
+        unknown = sorted(ONLY - oracle.keys())
+        if unknown:
+            sys.exit(f"no oracle for: {' '.join(unknown)}")
+        oracle = {n: q for n, q in oracle.items() if n in ONLY}
     ok, bad = [], []
     for name, sql in sorted(oracle.items()):
         try:

@@ -103,6 +103,19 @@ object InternalCaches {
         cp
     }
 
+  /** [[pinStage]] after a round-robin respread to the session's
+    * shuffle parallelism. Multi-tier curation pipelines pin after
+    * every filter/join tier, and those tier outputs AQE-coalesce to
+    * 1-2 byte-small partitions (survivors ≈ 4.5 MB at sf0.1); the
+    * pinned partitioning is what the next tier's CPU-dense pass
+    * (fingerprints, simhash, shingles, BPE) runs at, so pinning the
+    * coalesced layout profiled as a chain of 0.3-0.9 s single-task
+    * stages between the pins. */
+  def pinSpread(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    pinStage(df.repartition(
+      df.sparkSession.sessionState.conf.numShufflePartitions))
+
   /** The reliable-checkpoint directory for [[pinStage]], if any:
     * session conf `spark.graft.checkpointDir` wins (testable), then
     * the `SPARK_GRAFT_CHECKPOINT_DIR` env; blank means local. */

@@ -4325,8 +4325,9 @@ object SparkEntry {
     // Okapi BM25 top-5 retrieval (k1=1.2, b=0.75): idf quantized to
     // integer micro-nats on the vocab relation, per-term contributions
     // integer-rounded, scores exact BIGINT sums — the t12 exactness
-    // discipline applied to ranking. Query terms broadcast; the
-    // corpus never shuffles for the candidate join
+    // discipline applied to ranking. Scored document-at-a-time in the
+    // corpus's hash(doc_id) partitions against a broadcast query-term
+    // index; only |Q|·k rows per partition shuffle for the cut
     "t26_bm25_topk" -> ((s, d) =>
       TextAnalysis.bm25TopK(Tables.documents(s, d), col("doc_id"),
         col("text"), col("doc_id") % 25 === 0, k = 5)),

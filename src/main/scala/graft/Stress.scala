@@ -430,8 +430,8 @@ object Stress {
     }
     // t26 BM25: the vocab relation stays CONSTANT as the corpus grows
     // (copies reuse the base vocabulary + one marker token per copy),
-    // so idf/query-term broadcasts are flat and the only growing
-    // relation is the (query, doc) candidate pair set — linear with a
+    // so idf/query-term broadcasts are flat and scoring is one
+    // document-at-a-time pass over the growing corpus — linear with a
     // FIXED query count (base-copy queries only)
     t("t26_bm25(fixed-queries)") {
       TextAnalysis.bm25TopK(docs, col("doc_id"), col("text"),

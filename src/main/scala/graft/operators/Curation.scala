@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.InternalCaches.TrackedPersist
+import graft.InternalCaches.{TrackedPersist, pinSpread}
 
 /** Training-corpus assembly operators: packing documents into
   * fixed-length context windows and re-balancing the language/source
@@ -484,14 +484,7 @@ object Curation {
     // plan multiplicatively (measured 25k scan nodes / 134k formatted
     // lines at stage 5) and Catalyst+AQE replanning of that tree
     // dominated p9's wall — guide §3.3's materialize-to-truncate.
-    // Every pin RESPREADS first: the tier-join outputs AQE-coalesce to
-    // 1-2 byte-small partitions (survivors ≈ 4.5 MB at sf0.1), and the
-    // pinned partitioning is what every next tier's CPU-dense pass
-    // (fingerprints, simhash, shingles, BPE) runs at — profiled as a
-    // chain of 0.3-0.9 s single-task stages between the pins
-    def pinSpread(df: DataFrame): DataFrame =
-      graft.InternalCaches.pinStage(df.repartition(
-        df.sparkSession.sessionState.conf.numShufflePartitions))
+    // Every pin respreads first (see InternalCaches.pinSpread)
     val s1 = pinSpread(corpus0.filter(
       TextAnalysis.qualityGatePass(col("text"), minWords, stops)))
     // stage 2: exact dedup — lowest doc_id per content fingerprint
@@ -645,12 +638,7 @@ object Curation {
     // stage pins (localCheckpoint), not persists — the p9 rationale:
     // b1/b2 are each referenced by the next tier AND the census rows,
     // so persist alone lets the plan tree re-embed every upstream tier
-    // respread inside each pin (the corpusBuildCensus pinSpread
-    // rationale): the pinned partitioning is what the next tier's
-    // CPU-dense pass runs at
-    def pinSpread(df: DataFrame): DataFrame =
-      graft.InternalCaches.pinStage(df.repartition(
-        df.sparkSession.sessionState.conf.numShufflePartitions))
+    // (see InternalCaches.pinSpread for why each pin respreads)
     // the p9 fused-gate form: one codegen'd filter, no gate joins
     val b1 = pinSpread(b0.filter(
       TextAnalysis.qualityGatePass(col("text"), minWords, stops)))

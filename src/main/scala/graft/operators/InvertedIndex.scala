@@ -92,13 +92,16 @@ object InvertedIndex {
       blockSize: Int = 64, k1: Double = 1.2, b: Double = 0.75)
       : Bm25Index = {
     require(blockSize > 0, s"blockSize=$blockSize")
-    // the bm25FromTf discipline (see TextAnalysis): ONE explicit
+    // the corpus layout of TextAnalysis.bm25FromTf: ONE explicit
     // hash(doc_id) exchange — persisted so AQE's per-consumer query
     // stages share a single materialization — clusters dl's groupBy,
     // the tf⋈dl join, AND (doc_id ⊆ {query_id, doc_id}) both
     // scoreBlocks aggregations downstream, so none of them plans
     // another exchange (the final score aggs previously landed on one
-    // AQE-coalesced task, ~0.7 s each on t30/t43)
+    // AQE-coalesced task, ~0.7 s each on t30/t43). Unlike bm25FromTf,
+    // which scores document-at-a-time, scoreBlocks still joins the
+    // query terms onto the read-set blocks' impacts and sums per
+    // (query, doc)
     val nPart =
       docs.sparkSession.sessionState.conf.numShufflePartitions
     val tf = docs.select(idCol.as("doc_id"),
@@ -300,7 +303,8 @@ object InvertedIndex {
   // reader at the tip loads the newest compaction plus the suffix
   // segments only — segments_loaded is the O(1)+suffix receipt.
   // Search is served from the reassembled postings through the SAME
-  // scoring as t26 (TextAnalysis.bm25FromTf), and is hash-equal to a
+  // scoring as t26 (TextAnalysis.bm25FromTf's document-at-a-time
+  // kernel over the reassembled tf), and is hash-equal to a
   // full rebuild because (a) batches PARTITION docs, so every
   // (doc, token) tf lives wholly inside one segment, and (b)
   // compaction is a multiset-preserving re-aggregation of postings —
@@ -364,7 +368,8 @@ object InvertedIndex {
   /** BM25 top-k served from a posting relation (any union of
     * segments): tf is reassembled by counting each doc's occurrences
     * in the payloads, then scored by the SAME definition as t26
-    * ([[TextAnalysis.bm25FromTf]]). */
+    * ([[TextAnalysis.bm25FromTf]]: one hash(doc_id) exchange, scored
+    * document-at-a-time inside it). */
   def bm25FromPostings(postings: DataFrame, qterms: DataFrame,
       k: Int = 5, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val tf = postings
@@ -375,7 +380,8 @@ object InvertedIndex {
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     // no persist: bm25FromTf's doc_id repartition is the shared
-    // materialization point for its three internal consumers
+    // materialization point for its three internal consumers (dl, df
+    // and the document-at-a-time scoring)
     TextAnalysis.bm25FromTf(tf, qterms, k, k1, b)
   }
 
@@ -434,7 +440,8 @@ object InvertedIndex {
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     // no persist: bm25FromTf's doc_id repartition is the shared
-    // materialization point for its three internal consumers
+    // materialization point for its three internal consumers (dl, df
+    // and the document-at-a-time scoring)
     TextAnalysis.bm25FromTf(tf, qterms, k)
       .withColumn("ckpt_seg", lit(ckpt.toLong))
       .withColumn("segments_loaded", lit(segmentsLoaded.toLong))

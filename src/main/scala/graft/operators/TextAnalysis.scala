@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.mutable
+
 import graft.Tables
 import graft.InternalCaches.TrackedPersist
 
@@ -12,8 +14,9 @@ import graft.InternalCaches.TrackedPersist
   * counting, quality scoring, language ID (stopword-hit heuristic),
   * document fingerprinting, and tf-idf. Everything is built from
   * codegen'd `org.apache.spark.sql.functions` (no UDFs), stays fully
-  * distributed (per-row or groupBy — no driver collects), and is
-  * deterministic so the DuckDB oracle can hash-match it.
+  * distributed (per-row or groupBy — the only driver collect is BM25's
+  * query-bounded term index), and is deterministic so the DuckDB
+  * oracle can hash-match it.
   */
 object TextAnalysis {
 
@@ -1075,14 +1078,16 @@ object TextAnalysis {
     * hash-matches.
     *
     * Scale shape: df/idf live on the vocab relation (broadcast); the
-    * query-term relation (queries × ≤vocab terms) is broadcast against
-    * tf, so the corpus-sized side never shuffles for the candidate
-    * join; only the (query, doc) pair relation shuffles, once, for the
-    * score aggregation. At 100 TB with a real open vocabulary you
-    * would serve this from the t24 block-partitioned inverted index
-    * with WAND upper-bound pruning (skip terms whose idf ceiling
-    * cannot lift a doc into the current top-k); the scoring semantics
-    * here are exactly what that index would rank with. */
+    * query terms (queries × ≤vocab terms) ship to every task as a
+    * token → query index, and scoring runs document-at-a-time inside
+    * the corpus's hash(doc_id) partitions ([[bm25FromTf]]), so the
+    * (query, doc, term) fan-out is never materialized and the only
+    * exchange after the corpus one carries |Q|·k rows per partition.
+    * At 100 TB with a real open vocabulary you would serve this from
+    * the t24 block-partitioned inverted index with WAND upper-bound
+    * pruning (skip terms whose idf ceiling cannot lift a doc into the
+    * current top-k); the scoring semantics here are exactly what that
+    * index would rank with. */
   def bm25TopK(docs: DataFrame, idCol: Column, textCol: Column,
       isQuery: Column, k: Int = 5, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
@@ -1090,8 +1095,8 @@ object TextAnalysis {
       explode(tokens(textCol)).as("token"))
     // no persist here: bm25FromTf's explicit doc_id repartition is the
     // single materialization point — its shuffle files are reused by
-    // all three consumers (dl, df, candidate join), so a persist on tf
-    // would only add a second copy of the same rows
+    // all three consumers (dl, df, scoring), so a persist on tf would
+    // only add a second copy of the same rows
     val tf = tok.groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     val qterms = docs.filter(isQuery)
@@ -1106,24 +1111,35 @@ object TextAnalysis {
     * whose tf is reassembled from stored posting blocks), so the two
     * can never drift. `tf` needs no caller-side persist: the explicit
     * doc_id repartition below is the shared materialization point
-    * (its shuffle files are read by all three consumers). */
+    * (its shuffle files are read by all three consumers). Ids must be
+    * integral; `qterms` is (query_id, token), one row per query term
+    * (a repeated row counts its term twice).
+    *
+    * Scale shape: one corpus exchange, hash(doc_id). Per-document
+    * impacts (contrib6) are computed on the corpus-sized tf, then
+    * scored DOCUMENT-AT-A-TIME in those same partitions
+    * ([[docAtATimeTopK]]): each task walks its documents in doc_id
+    * order with one accumulator per query and keeps a k-bounded heap
+    * per query, so the (query, doc, term) fan-out — |Q| × postings
+    * rows, 17.6M at sf0.1 for t26, summed to 999,750 pairs of which
+    * 1,000 survive — is never materialized. The one exchange after
+    * the corpus one is hash(query_id) over |Q|·k rows per partition,
+    * where [[Events.topKPerGroup]] finishes the cut. Driver and
+    * broadcast state is the query-term index (|Q| × query terms);
+    * per-task memory is O(|Q|·k). */
   def bm25FromTf(tf: DataFrame, qterms: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // ONE explicit corpus exchange: hash(doc_id) at the session's
     // shuffle parallelism. hash(doc_id) CLUSTERS every downstream
-    // keyed step — dl's groupBy(doc_id), the tf⋈dl join, and
-    // (because doc_id ⊆ {query_id, doc_id}) the final per-pair score
-    // aggregation — so none of them plans another exchange. Before
-    // this, the scoring groupBy's own exchange carried 119 MB of
-    // partially-aggregated pairs and AQE coalesced its reduce side to
-    // TWO tasks (64 MB advisory; profiled 4.2 s wall / 8.3 s CPU on
-    // t26 at sf0.1, the query's single largest stage): byte-sized
-    // coalescing is wrong for an agg whose cost is CPU per row, and
-    // the explicit count (guide §2.1/§2.4: share one exchange across
-    // same-keyed operations, size reducers for the work) keeps the
-    // CPU-dense fan-out + aggregation on every core. The count
-    // follows spark.sql.shuffle.partitions, so cluster deployments
-    // size it by data volume as usual.
+    // doc-keyed step — dl's groupBy(doc_id), the tf⋈dl join, and the
+    // document-at-a-time scoring, which needs all of a document's
+    // impacts in one partition — so none of them plans another
+    // exchange. The partition count is explicit because AQE's
+    // byte-sized coalescing (64 MB advisory) would pack this
+    // CPU-per-row work onto one or two tasks (guide §2.1/§2.4: share
+    // one exchange across same-keyed operations, size reducers for
+    // the work). It follows spark.sql.shuffle.partitions, so cluster
+    // deployments size it by data volume as usual.
     // the persist ON TOP of the exchange is load-bearing: without it,
     // AQE compiles each consumer's query stage into its own RDD and
     // exchange-reuse fails to unify the three copies when the subtree
@@ -1145,12 +1161,8 @@ object TextAnalysis {
         * lit(1e6)).cast("long"))
       .select(col("token"), col("idf6"), col("n"), col("tot"))
     // contrib6 attaches to the CORPUS-sized tf (one row per (doc,
-    // token)) BEFORE the query fan-out — the old plan joined dl onto
-    // the post-fan-out (query, token, doc) relation, which is |Q|×
-    // larger (measured 119 MB shuffled into a sort-merge join on t26
-    // at sf0.1). Same expression tree on the same single (dl, idf6)
-    // match per row, so every contrib6 is bit-identical; only the
-    // join order changed (guide §2.3: shuffle the thin relation)
+    // token)), never to a per-query relation, which would be |Q|×
+    // larger (guide §2.3: shuffle the thin relation)
     val impacts = tfd
       .join(dl, Seq("doc_id"))
       .join(broadcast(idf6), Seq("token"))
@@ -1159,13 +1171,97 @@ object TextAnalysis {
         (col("tf") + lit(k1) * (lit(1.0 - b) +
           lit(b) * col("dl") * col("n") / col("tot")))).cast("long"))
       .select(col("token"), col("doc_id"), col("contrib6"))
-    val cand = impacts.join(broadcast(qterms), Seq("token"))
-      .filter(col("query_id") =!= col("doc_id"))
-    val scored = cand.groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("contrib6")).as("score6"))
-    Events.topKPerGroup(scored, Seq(col("query_id")),
-      Seq(col("score6").desc, col("doc_id").asc), k)
+    Events.topKPerGroup(docAtATimeTopK(impacts, qterms, k),
+        Seq(col("query_id")), Seq(col("score6").desc, col("doc_id").asc), k)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score6"))
+  }
+
+  /** Per-partition BM25 candidates from doc_id-CLUSTERED `impacts`
+    * (token, doc_id, contrib6): (query_id, doc_id, score6), at most k
+    * rows per query per partition, each the partition's best under
+    * (score6 desc, doc_id asc). A (query, doc) pair exists iff the
+    * doc holds one of the query's terms — also when its score6 sums
+    * to 0 — and a query never scores itself: exactly the pairs a
+    * term-at-a-time join + groupBy would produce, with the same
+    * integer sums. Because all of a doc's impacts share one
+    * partition, each query's global top-k is among the rows emitted. */
+  private def docAtATimeTopK(impacts: DataFrame, qterms: DataFrame,
+      k: Int): DataFrame = {
+    val spark = impacts.sparkSession
+    import spark.implicits._
+    // the query-term index: one query-bounded collect, shipped once
+    // per executor (the Similarity.streamingSemanticDedup idiom). A
+    // repeated (query, token) row keeps its multiplicity, as in a join
+    val qt = qterms
+      .filter(col("query_id").isNotNull && col("token").isNotNull)
+      .select(col("query_id").cast("long"), col("token"))
+      .as[(Long, String)].collect()
+    val qids = qt.map(_._1).distinct.sorted
+    val ordOf = qids.zipWithIndex.toMap
+    val byToken = qt.groupBy(_._2).view
+      .mapValues(_.map(r => ordOf(r._1))).toMap
+    val index = spark.sparkContext.broadcast((qids, byToken))
+    impacts
+      .sortWithinPartitions(col("doc_id"))
+      .select(col("doc_id").cast("long"), col("token"), col("contrib6"))
+      .as[(Long, String, Long)]
+      .mapPartitions { rows =>
+        val (qids, byToken) = index.value
+        val acc = new Array[Long](qids.length)
+        val hit = new Array[Boolean](qids.length)
+        val touched = new Array[Int](qids.length)
+        var nTouched = 0
+        // per query, the k best (score6, doc_id) so far; the head is
+        // the worst pair kept under (score6 desc, doc_id asc)
+        val worstFirst =
+          Ordering.Tuple2(Ordering.Long.reverse, Ordering.Long)
+        val heaps =
+          new Array[mutable.PriorityQueue[(Long, Long)]](qids.length)
+        var doc = 0L
+        // close the current doc: offer each touched query's sum
+        def flush(): Unit = {
+          var i = 0
+          while (i < nTouched) {
+            val q = touched(i)
+            if (heaps(q) == null)
+              heaps(q) = mutable.PriorityQueue.empty(worstFirst)
+            val h = heaps(q)
+            val p = (acc(q), doc)
+            if (h.size < k) h.enqueue(p)
+            else if (k > 0 && worstFirst.lt(p, h.head)) {
+              h.dequeue(); h.enqueue(p)
+            }
+            acc(q) = 0L
+            hit(q) = false
+            i += 1
+          }
+          nTouched = 0
+        }
+        rows.foreach { case (d, token, contrib6) =>
+          if (d != doc) { flush(); doc = d }
+          byToken.get(token).foreach { qs =>
+            var j = 0
+            while (j < qs.length) {
+              val q = qs(j)
+              if (qids(q) != d) {
+                if (!hit(q)) {
+                  hit(q) = true; touched(nTouched) = q; nTouched += 1
+                }
+                acc(q) += contrib6
+              }
+              j += 1
+            }
+          }
+        }
+        flush()
+        heaps.iterator.zipWithIndex.filter(_._1 != null).flatMap {
+          case (h, q) => h.iterator.map { case (s6, d) => (qids(q), d, s6) }
+        }
+      }
+      .toDF("query_id", "doc_id", "score6")
+      .select(col("query_id").cast(qterms.schema("query_id").dataType),
+        col("doc_id").cast(impacts.schema("doc_id").dataType),
+        col("score6"))
   }
 
   /** Luhn checksum over a digit string as a Column: position i counts

@@ -1,5 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Similarity, TextAnalysis}
@@ -70,6 +79,151 @@ class RetrievalSpec extends SparkSpec {
     assert(ids.forall { case (q, d) => q != d })
     // both queries see each other and doc 1
     assert(ids.toSet == Set((0L, 25L), (0L, 1L), (25L, 0L), (25L, 1L)))
+  }
+
+  /** The term-at-a-time scoring bm25FromTf ran before its
+    * document-at-a-time kernel: every (query, doc, term) match
+    * materialized by impacts ⋈ broadcast(qterms), summed per (query,
+    * doc), then cut. Kept only as the reference the kernel must
+    * reproduce row for row. */
+  private def fanOutBm25(tf: DataFrame, qterms: DataFrame, k: Int,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    val dfq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    val tots = dl.agg(count(lit(1)).cast("double").as("n"),
+      sum(col("dl")).cast("double").as("tot"))
+    val idf6 = dfq.crossJoin(broadcast(tots))
+      .withColumn("idf6", round(log(lit(1.0) +
+        (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+        * lit(1e6)).cast("long"))
+    val impacts = tf.join(dl, Seq("doc_id")).join(idf6, Seq("token"))
+      .withColumn("contrib6", round(col("idf6") *
+        (col("tf") * lit(k1 + 1.0)) /
+        (col("tf") + lit(k1) * (lit(1.0 - b) +
+          lit(b) * col("dl") * col("n") / col("tot")))).cast("long"))
+    val scored = impacts.join(broadcast(qterms), Seq("token"))
+      .filter(col("query_id") =!= col("doc_id"))
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(sum(col("contrib6")).as("score6"))
+    graft.operators.Events.topKPerGroup(scored, Seq(col("query_id")),
+        Seq(col("score6").desc, col("doc_id").asc), k)
+      .select(col("query_id"), col("rank"), col("doc_id"), col("score6"))
+  }
+
+  /** 2,000 docs that all hold "c" (df = N, so idf6 is tiny) plus one
+    * 10M-token doc whose "c" contrib6 rounds to 0; docs d and d+15
+    * below 60 share their "m" term and tf (score ties); "solo" is in
+    * docs 500 and 501 only. */
+  private def edgeCorpus: (DataFrame, DataFrame) = {
+    val n = 2000
+    val tf = ((0 until n).map(d => (d.toLong, "c", 1L)) ++
+      (0 until 60).map(d => (d.toLong, s"m${d % 5}", 1L + d % 3)) ++
+      Seq((500L, "solo", 1L), (501L, "solo", 1L),
+        (n - 1L, "pad", 10000000L)))
+      .toDF("doc_id", "token", "tf")
+    val qterms = Seq(
+      (0L, "m0"), (0L, "m0"), // duplicated row; doc 0 holds m0 (self)
+      (7L, "m2"), (7L, "c"), // every doc is a candidate
+      (3L, "c"), // the 10M-token doc scores 0
+      (500L, "solo"), // one candidate besides itself
+      (4000L, "m1"), (4000L, "nosuch"), // a query that is not a doc
+      (9L, "nosuch")) // no candidate at all
+      .toDF("query_id", "token")
+    (tf, qterms)
+  }
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try body finally spark.conf.set(key, old)
+  }
+
+  test("bm25FromTf document-at-a-time kernel ≡ the term fan-out") {
+    val (tf, qterms) = edgeCorpus
+    def rows(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+      df.select("query_id", "rank", "doc_id", "score6")
+        .as[(Long, Long, Long, Long)].collect().toSeq.sorted
+    // k = 3 cuts inside tie runs; k = 2100 emits every candidate pair
+    for (k <- Seq(3, 2100)) {
+      val ref = rows(fanOutBm25(tf, qterms, k))
+      val refDistinct = rows(fanOutBm25(tf, qterms.distinct(), k))
+      // the corpus really exercises each edge case
+      assert(ref.exists(r => ref.exists(o =>
+        o._1 == r._1 && o._4 == r._4 && o._3 != r._3)), "no score tie")
+      assert(ref.count(_._1 == 500L) == 1, "solo query should have 1 row")
+      assert(ref.forall(r => r._1 != r._3), "self-match in reference")
+      assert(ref != refDistinct, "duplicate qterms row had no effect")
+      if (k > 2000) assert(ref.exists(_._4 == 0L), "no zero score")
+      for (parts <- Seq(1, 4))
+        withConf("spark.sql.shuffle.partitions", parts.toString) {
+          val out = TextAnalysis.bm25FromTf(tf, qterms, k)
+          assert(out.schema.map(f => (f.name, f.dataType)) ==
+            fanOutBm25(tf, qterms, k).schema.map(f => (f.name, f.dataType)))
+          val got = rows(out)
+          assert(got == ref, s"k=$k partitions=$parts: " +
+            s"only-kernel=${got.diff(ref).take(5)} " +
+            s"only-fanout=${ref.diff(got).take(5)}")
+        }
+    }
+    graft.InternalCaches.releaseAll()
+  }
+
+  /** Physical nodes through AQE stages. `whole` also descends into
+    * cached relations' plans; otherwise the walk stops at them and at
+    * broadcasts — the scoring path above the cached corpus exchange,
+    * without the vocab side. */
+  private def planNodes(p: SparkPlan, whole: Boolean): Seq[SparkPlan] =
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan, whole)
+      case q: QueryStageExec => planNodes(q.plan, whole)
+      case m: InMemoryTableScanExec =>
+        if (whole) planNodes(m.relation.cachedPlan, whole) else Nil
+      case _: BroadcastExchangeExec if !whole => Nil
+      case _ => p.children.flatMap(planNodes(_, whole))
+    })
+
+  test("bm25FromTf plan: one query_id exchange, no qterms join") {
+    val docs = Tables.documents(spark, Sf0001)
+    // no size-based broadcasts: every broadcast left is the operator's
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val out = TextAnalysis.bm25TopK(docs, col("doc_id"), col("text"),
+        col("doc_id") % 25 === 0, k = 5)
+      out.collect()
+      val all = planNodes(out.queryExecution.executedPlan, whole = true)
+      def keyedOn(e: ShuffleExchangeExec) = e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.flatMap(_.references.map(_.name))
+        case _ => Nil
+      }
+      assert(all.collect { case e: ShuffleExchangeExec => keyedOn(e) }
+        .contains(Seq("doc_id")), "corpus hash(doc_id) exchange missing")
+      val scoringExchanges =
+        planNodes(out.queryExecution.executedPlan, whole = false)
+          .collect { case e: ShuffleExchangeExec => keyedOn(e) }
+      assert(scoringExchanges == Seq(Seq("query_id")),
+        s"scoring exchanges: $scoringExchanges")
+      all.collect { case j: BaseJoinExec => j }.foreach { j =>
+        assert(!j.children.exists(_.output.exists(_.name == "query_id")),
+          s"join over query terms: ${j.nodeName}")
+      }
+      all.collect { case bx: BroadcastExchangeExec => bx }.foreach { bx =>
+        assert(!bx.output.exists(a => Set("doc_id", "query_id")(a.name)),
+          s"broadcast of ${bx.output.map(_.name)}")
+      }
+    }
+    graft.InternalCaches.releaseAll()
+    // the only driver collect is the query-term index: building the
+    // frame over a tf that fails when read still succeeds (the
+    // repartition keeps the optimizer from folding the udf into the
+    // local relation at plan time)
+    val poison = udf((d: Long) => {
+      if (d >= 0) throw new IllegalStateException("tf was read"); d
+    })
+    val (tf, qterms) = edgeCorpus
+    TextAnalysis.bm25FromTf(
+      tf.repartition(2).withColumn("doc_id", poison(col("doc_id"))),
+      qterms, 3)
+    graft.InternalCaches.releaseAll()
   }
 
   test("bm25FromIndex (WAND) lands on bm25TopK's exact answer") {
