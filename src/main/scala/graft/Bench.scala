@@ -94,7 +94,7 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     // the shared harness session (GraftSession): identical scan-split
     // sizing, AQE posture and cleaner cadence across Bench / Verify /
-    // PlanDump / StageProfile, so the bench can never measure under a
+    // PlanDump, so the bench can never measure under a
     // different plan than the dumps or the oracle gate (each knob is
     // documented in GraftSession)
     val spark = GraftSession.build(cpus)

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE session builder every harness main (Bench, Verify,
-  * PlanDump, StageProfile, the Tune* probes) goes through — the same
+  * PlanDump, Stress, ScaleData) goes through — the same
   * scan-split sizing, AQE posture and cleaner cadence everywhere, so a
   * tuning change can never make the bench measure under one plan while
   * the plan dumps or the oracle gate run under another (the
@@ -19,12 +19,14 @@ import org.apache.spark.sql.SparkSession
   *  - periodicGC 2 min: a 288-query suite in one JVM leaks driver-side
   *    weak-ref'd shuffle/broadcast state that the ContextCleaner only
   *    frees after a GC; the default 30 min interval outlives the run.
-  *  - openCostInBytes (default 256 KB via SPARK_GRAFT_OPEN_COST): the
-  *    4 MB default floor caps byte-small local parquet at ≤3 splits,
+  *  - openCostInBytes 256 KB (a constant; Spark's default is 4 MB): the
+  *    4 MB floor caps byte-small local parquet at ≤3 splits,
   *    starving CPU-dense text scans; at any real corpus size
   *    bytes/parallelism dominates and the knob never binds.
   */
 object GraftSession {
+  private val OpenCostBytes = 262144L
+
   def build(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -35,8 +37,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "262144"))
+      .config("spark.sql.files.openCostInBytes", OpenCostBytes)
       .getOrCreate()
     GraftFunctions.installOptimizations(spark)
     spark

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a scaled copy of the sf0.1 corpus tables so the BENCH
@@ -16,36 +16,34 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleData [multiplier] [outDir]
   */
 object ScaleData {
+  /** `mult` copies of `df` unioned: copy i shifts `idCol` by i·10M and,
+    * for i > 0, appends the marker token `copymarker<i>` to `textCol`.
+    * The one definition of the ×N perturbation (Stress uses it too). */
+  def scaled(df: DataFrame, idCol: String, textCol: Option[String],
+      mult: Int): DataFrame = {
+    val copies = (0 until mult).map { i =>
+      val shifted = df.withColumn(idCol, col(idCol) + lit(i * 10000000L))
+      textCol match {
+        case Some(t) if i > 0 =>
+          shifted.withColumn(t, concat(col(t), lit(s" copymarker$i")))
+        case _ => shifted
+      }
+    }
+    copies.reduce(_ unionByName _)
+  }
+
   def main(args: Array[String]): Unit = {
     val mult = if (args.length > 0) args(0).toInt else 10
     val out = if (args.length > 1) args(1) else "/tmp/graft_sfx10"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.1"
 
-    def scaled(df: DataFrame, idCol: String, textCol: Option[String])
-        : DataFrame = {
-      val copies = (0 until mult).map { i =>
-        val shifted = df.withColumn(idCol, col(idCol) + lit(i * 10000000L))
-        textCol match {
-          case Some(t) if i > 0 =>
-            shifted.withColumn(t, concat(col(t), lit(s" copymarker$i")))
-          case _ => shifted
-        }
-      }
-      copies.reduce(_ unionByName _)
-    }
-
-    scaled(Tables.documents(spark, sf), "doc_id", Some("text"))
+    scaled(Tables.documents(spark, sf), "doc_id", Some("text"), mult)
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    scaled(Tables.embeddings(spark, sf), "vec_id", None)
+    scaled(Tables.embeddings(spark, sf), "vec_id", None, mult)
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     println(s"SCALED mult=$mult out=$out")

@@ -6647,7 +6647,7 @@ object SparkEntry {
     // path against the exact top-5 over the ten fixed serve queries.
     // With s30 (trained IVF at the same query set) this is the
     // oracle-checked anchor of the graph-vs-IVF recall frontier
-    // (BASELINE §10; graft.TuneGraphRecall sweeps the budget axis) —
+    // (BASELINE §10 records the budget-axis sweep) —
     // the number that says when the graph tier earns its edge-
     // coupling cost. Serve-only: the index loads from the scratch
     // cache, the exact leg is |Q|-fixed
@@ -7338,7 +7338,7 @@ object SparkEntry {
 
     // partition-pruned layout: write partitioned by lang, read back
     // with a partition filter — the scan must touch only 2 of the
-    // lang directories (PlanAudit shows the pruned partition count)
+    // lang directories (PlanDump's plan shows the pruned partition count)
     "q42_partition_pruning" -> ((s, d) => {
       val scratch = scratchDir("graft_part", d)
       Tables.documents(s, d).write.mode("overwrite")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -20,35 +20,18 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val mult = if (args.nonEmpty) args(0).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.installOptimizations(spark)
     val sf = "/root/testdata/sf0.1"
 
-    def scaled(df: DataFrame, idCol: String, textCol: Option[String])
-        : DataFrame = {
-      val copies = (0 until mult).map { i =>
-        val shifted = df.withColumn(idCol, col(idCol) + lit(i * 10000000L))
-        textCol match {
-          case Some(t) if i > 0 =>
-            shifted.withColumn(t, concat(col(t), lit(s" copymarker$i")))
-          case _ => shifted
-        }
-      }
-      copies.reduce(_ unionByName _)
-    }
-
-    val docs = scaled(Tables.documents(spark, sf), "doc_id", Some("text"))
+    val docs = ScaleData.scaled(Tables.documents(spark, sf), "doc_id",
+      Some("text"), mult)
       .persist()
-    val emb = scaled(Tables.embeddings(spark, sf), "vec_id", None).persist()
+    val emb = ScaleData.scaled(Tables.embeddings(spark, sf), "vec_id", None,
+      mult).persist()
     // the changelog-shaped probes (as-of, SCD2): copies shift the KEY
     // space too, so per-key state stays constant as the corpus grows
-    val ev = scaled(Tables.events(spark, sf), "event_id", None)
+    val ev = ScaleData.scaled(Tables.events(spark, sf), "event_id", None, mult)
       .withColumn("user_id",
         col("user_id") + expr("event_id div 10000000") * 10000000L)
       .persist()
@@ -196,7 +179,8 @@ object Stress {
         col("event_type"), col("event_id")).count()
     }
     t("q50_zorder_audit") {
-      val o = scaled(Tables.orders(spark, sf), "o_orderkey", None)
+      val o = ScaleData.scaled(Tables.orders(spark, sf), "o_orderkey", None,
+        mult)
       Layout.compareLayouts(
         o.select(col("o_custkey"),
           datediff(col("o_orderdate"), lit("1970-01-01")).cast("long")

@@ -50,12 +50,6 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame =
     table(s, d, "embeddings")
 
-  /** md5 hex of a column rendered as a string; identical in DuckDB as
-    * `md5(CAST(c AS VARCHAR))` provided the string rendering matches
-    * (safe for string and integral columns; avoid for floats/timestamps).
-    */
-  def md5Str(c: Column): Column = md5(c.cast("string").cast("binary"))
-
   /** Deterministic "random" in [0, 1): the first 8 md5 hex digits of
     * (key, seed) parsed as an unsigned 32-bit int, scaled by 2^-32.
     * DuckDB twin: `('0x' || substr(md5(k || '#' || seed), 1, 8))::BIGINT

@@ -679,10 +679,6 @@ object ImageKernels {
   val trainKernelUdf =
     udf((enc: Array[Byte], seed: Long, h: Int, w: Int) =>
       preprocessForTrain(enc, seed, h, w))
-  /** Full-mode train kernel (F6 4-way resize draw + 4-ordering color). */
-  val trainKernelFullUdf =
-    udf((enc: Array[Byte], seed: Long, h: Int, w: Int) =>
-      preprocessForTrain(enc, seed, h, w, fastMode = false))
   val evalKernelUdf =
     udf((enc: Array[Byte], h: Int, w: Int) => preprocessForEval(enc, h, w))
   val dimsUdf = udf((enc: Array[Byte]) => {

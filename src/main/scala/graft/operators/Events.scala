@@ -300,7 +300,6 @@ object Events {
           .otherwise(lit("assistant")))
       .withColumn("toks",
         graft.Tables.hashU32(col("event_id"), 23) % 37L + 3L)
-    val bySess = Window.partitionBy(col("user_id"), col("session_id"))
     val tail = Window.partitionBy(col("user_id"), col("session_id"))
       .orderBy(col("ts_us").desc, col("event_id").desc)
       .rowsBetween(Window.unboundedPreceding, 0)

@@ -80,12 +80,6 @@ object TextAnalysis {
         .cast("double") / size(toks))
   }
 
-  /** Punctuation-character ratio of the raw text. */
-  def punctRatio(text: Column): Column =
-    when(length(text) === 0, lit(0.0)).otherwise(
-      (length(text) - length(regexp_replace(text, "[.,;:!?'\"()]", "")))
-        .cast("double") / length(text))
-
   /** Mean token length in characters. */
   def meanTokenLen(text: Column): Column = {
     val toks = tokens(text)
@@ -1108,7 +1102,7 @@ object TextAnalysis {
   /** [[bm25TopK]]'s scoring from an ALREADY-materialized (doc_id,
     * token, tf) relation — the single scoring definition shared by
     * the corpus-rescan path (t26) and the segment-served path (t36,
-    * whose tf is reassembled from stored posting blocks), so the two
+    * whose tf is reassembled from its segments' struct postings), so the two
     * can never drift. `tf` needs no caller-side persist: the explicit
     * doc_id repartition below is the shared materialization point
     * (its shuffle files are read by all three consumers). Ids must be

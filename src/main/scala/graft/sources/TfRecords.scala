@@ -488,8 +488,9 @@ object TfRecords {
     StructField("image/height", LongType),
     StructField("image/width", LongType)))
 
-  /** Write an [[ImageRecord]]-shaped frame (columns encoded/format/
-    * label/height/width) with the reference's exact feature keys. */
+  /** Write a frame in the reference's 5-field image record shape
+    * (columns encoded/format/label/height/width; FIXTURES.md §1.1)
+    * with the reference's exact feature keys. */
   def writeImages(df: DataFrame, dir: String, split: String,
       numShards: Int = 5): Seq[(String, Long)] = {
     import org.apache.spark.sql.functions.col
